@@ -1109,9 +1109,13 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
         # subset of its keys) AND the n_docs window's partitioning, so
         # the explicit repartition replaces the aggregate exchange and
         # the window exchange (2 Exchange → 1, verified in the plan
-        # gate). Bytes drop too: the single exchange carries each gram
-        # once, where the two-exchange form shuffled the (h, doc_id)
-        # aggregate twice.
+        # gate). Bytes are a trade-off, not a sure win: the single
+        # exchange ships every raw gram row, because the repartition
+        # runs before the (h, doc_id) aggregate and so loses its
+        # map-side partial combine; the two-exchange form shuffled the
+        # combined aggregate twice. On inputs with heavy in-partition
+        # duplication (one doc repeating a gram many times) the single
+        # exchange can carry MORE bytes than the two did.
         .repartition(F.col("h"))
         .groupBy("h", "doc_id")
         .agg(F.count(F.lit(1)).alias("cnt"))

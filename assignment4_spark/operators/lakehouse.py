@@ -412,8 +412,9 @@ def _bucket_of(key_col: str, n_buckets: int):
 def _staging_path(base_dir: str, prefix: str, version: int, writer_id: str,
                   attempt: int) -> str:
     """ATTEMPT-PRIVATE staging directory name, shared by every commit
-    path (init / merge / compact): pid + thread + a process-wide
-    monotonic sequence. writer_id is identity/debugging only, never a
+    path (init_table, and every retrying face through _commit's
+    ``new_dir``): pid + thread + a process-wide monotonic
+    sequence. writer_id is identity/debugging only, never a
     safety requirement. pid/thread alone are NOT enough: a published
     commit directory keeps living under its staging name (the manifest
     references files inside it), so a LATER attempt on the same thread
@@ -1637,6 +1638,110 @@ def _publish_manifest(base_dir: str, manifest: dict) -> bool:
     return True
 
 
+def _commit(
+    base_dir: str,
+    writer_id: str,
+    what: str,
+    stage,
+    *,
+    max_retries: int,
+    before_commit=None,
+    after_lost=None,
+) -> tuple:
+    """The optimistic-commit loop every retrying write face runs
+    (restore / publish / merge / compact / optimize / drop / MOR and DV
+    deletes / replace / rebucket). Each attempt pins the latest
+    manifest, lets the face ``stage(snap, new_dir)`` its work against
+    that pin, runs the ``before_commit(attempt)`` test seam (invoked
+    after the files are written, before the CAS — the window in which a
+    competing commit makes this writer lose), and publishes through the
+    CAS (_publish_manifest).
+
+    ``stage`` returns ``(manifest, value)`` to commit ``manifest``, or
+    ``(None, value)`` when there is nothing to commit — returned as
+    ``(value, 0)`` without publishing. ``new_dir(prefix)`` names a fresh
+    attempt-private staging directory (_staging_path) for the pinned
+    snapshot's next version. Every directory so named is removed on
+    every exit of its attempt that does not publish — a lost CAS, a
+    vacuum-expired pin, a raising face or hook — because no manifest
+    references it, and vacuum reclaims unreferenced staging only when
+    asked to (``orphan_grace_seconds``).
+
+    A missing-file error out of ``stage`` (a vacuum expired the pinned
+    version mid-read, see _is_missing_file_error) re-pins and retries
+    like a lost CAS. ``after_lost(snap)`` runs after every lost CAS
+    (the serializable merge's conflict probe). Returns ``(value,
+    attempts)``; raises MergeConflictError after ``max_retries + 1``
+    lost attempts (livelock guard)."""
+    import shutil
+
+    for attempt in range(max_retries + 1):
+        snap = load_manifest(base_dir)
+        dirs: list[str] = []
+
+        def new_dir(prefix: str) -> str:
+            dirs.append(
+                _staging_path(
+                    base_dir, prefix, snap["version"] + 1, writer_id, attempt
+                )
+            )
+            return dirs[-1]
+
+        published = False
+        try:
+            try:
+                manifest, value = stage(snap, new_dir)
+            except Exception as ex:
+                if _is_missing_file_error(ex):
+                    continue  # the pin expired mid-read: re-pin
+                raise
+            if manifest is None:
+                return value, 0
+            if before_commit is not None:
+                before_commit(attempt)
+            published = _publish_manifest(base_dir, manifest)
+            if published:
+                return value, attempt + 1
+        finally:
+            if not published:
+                for d in dirs:
+                    shutil.rmtree(d, ignore_errors=True)
+        if after_lost is not None:
+            after_lost(snap)
+    raise MergeConflictError(
+        f"{what} lost the commit race {max_retries + 1} times"
+    )
+
+
+def _bucket_map(by_bucket: dict) -> dict[str, list]:
+    """Manifest form of a per-bucket map: string keys in bucket order."""
+    return {str(b): by_bucket[b] for b in sorted(by_bucket, key=int)}
+
+
+def _carry_pending_deletes(
+    manifest: dict, snap: dict, rewritten: set[int], coalesced=None
+) -> None:
+    """Set the next manifest's pending MOR-delete and deletion-vector
+    sidecar maps from the pinned snapshot's. A bucket in ``rewritten``
+    applied its pending deletes physically (every rewrite reads through
+    _read_visible_base), so its sidecars clear; every other bucket's
+    carry forward, except where ``coalesced`` ({"delete_files" |
+    "dv_files": {bucket: files}}) replaces them. Empty entries and maps
+    are dropped."""
+    for key in ("delete_files", "dv_files"):
+        kept = {
+            b: fs
+            for b, fs in (snap.get(key) or {}).items()
+            if int(b) not in rewritten
+        }
+        for b, fs in ((coalesced or {}).get(key) or {}).items():
+            kept[str(b)] = fs
+        kept = {b: fs for b, fs in kept.items() if fs}
+        manifest.pop(key, None)
+        if kept:
+            manifest[key] = _bucket_map(kept)
+
+
 def _staged_tombstone_buckets(
     spark: SparkSession, staging: str, types: dict[str, str]
 ) -> list[int]:
@@ -1781,7 +1886,7 @@ def init_table(
         "key_col": key_col,
         "columns": df.columns,
         "column_types": types0,
-        "buckets": {str(b): fs for b, fs in sorted(_list_bucket_files(staging).items())},
+        "buckets": _bucket_map(_list_bucket_files(staging)),
         # true per-bucket flags, not "every bucket": a seed carrying an
         # all-false marker column (the normal pattern) must not doom
         # the first compact_tombstones to a full-table scan. Computed
@@ -2194,8 +2299,8 @@ def restore_table(
 
     Returns ``(committed_version, attempts)``."""
     old = load_manifest(base_dir, to_version)  # raises if expired
-    for attempt in range(max_retries + 1):
-        snap = load_manifest(base_dir)
+
+    def stage(snap, _new_dir):
         manifest = _strip_commit_records(
             {**old, "version": snap["version"] + 1}
         )
@@ -2207,13 +2312,11 @@ def restore_table(
                 int(old.get("identity_high_water") or 0),
                 int(snap.get("identity_high_water") or 0),
             )
-        if before_commit is not None:
-            before_commit(attempt)
-        if _publish_manifest(base_dir, manifest):
-            return manifest["version"], attempt + 1
-    raise MergeConflictError(
-        f"restore to v{to_version} lost the commit race "
-        f"{max_retries + 1} times"
+        return manifest, manifest["version"]
+
+    return _commit(
+        base_dir, writer_id, f"restore to v{to_version}", stage,
+        max_retries=max_retries, before_commit=before_commit,
     )
 
 
@@ -2322,8 +2425,8 @@ def publish_from(
     )
     with open(rec_path, "w") as fh:
         json.dump({"target": os.path.abspath(main_dir), "version": v}, fh)
-    for attempt in range(max_retries + 1):
-        snap_main = load_manifest(main_dir)
+
+    def stage(snap_main, _new_dir):
         manifest = _strip_commit_records(
             {**snap_src, "version": snap_main["version"] + 1}
         )
@@ -2338,13 +2441,11 @@ def publish_from(
                 int(snap_src.get("identity_high_water") or 0),
                 int(snap_main.get("identity_high_water") or 0),
             )
-        if before_commit is not None:
-            before_commit(attempt)
-        if _publish_manifest(main_dir, manifest):
-            return manifest["version"], attempt + 1
-    raise MergeConflictError(
-        f"publish from {source_dir} v{v} lost the commit race "
-        f"{max_retries + 1} times"
+        return manifest, manifest["version"]
+
+    return _commit(
+        main_dir, writer_id, f"publish from {source_dir} v{v}", stage,
+        max_retries=max_retries, before_commit=before_commit,
     )
 
 
@@ -2592,8 +2693,9 @@ def _is_missing_file_error(ex: Exception) -> bool:
 
 
 class MergeConflictError(RuntimeError):
-    """Raised when a merge loses the commit CAS more than max_retries
-    times in a row (livelock guard; production backs off instead)."""
+    """Raised when any commit face (merge, delete, compaction, restore,
+    ...) loses the commit CAS more than max_retries times in a row
+    (_commit's livelock guard; production backs off instead)."""
 
 
 class SerializationConflictError(MergeConflictError):
@@ -2765,8 +2867,6 @@ def merge_upsert_manifest(
     exhausts max_retries.
 
     Returns ``(committed_version, attempts)``."""
-    import shutil
-
     spark = updates.sparkSession
     if patch_cols is not None and evolve_schema:
         raise ValueError(
@@ -2786,8 +2886,11 @@ def merge_upsert_manifest(
         updates, quarantined, gate_stats = _gate_expectations(
             updates, expectations
         )
-    for attempt in range(max_retries + 1):
-        snap = load_manifest(base_dir)
+    # the last attempt's touched buckets scope the serializable probe
+    touched: list[int] = []
+
+    def stage(snap, new_dir):
+        nonlocal touched
         key_col, n_buckets = snap["key_col"], snap["n_buckets"]
         if tiebreak_col == key_col:
             # within a key every row shares the key, so it cannot break
@@ -2910,241 +3013,228 @@ def merge_upsert_manifest(
                 ]
             ).withColumn("bucket", _bucket_of(key_col, n_buckets))
         next_version = snap["version"] + 1
-        staging = _staging_path(base_dir, "commit", next_version, writer_id, attempt)
-        # everything that READS the pinned snapshot sits inside the
-        # retry guard: spark.read.parquet performs a plan-time
-        # path-existence check, so a vacuum expiring the pinned version
-        # between load_manifest and here surfaces as PATH_NOT_FOUND at
-        # READ construction, not only during the staging write
-        try:
-            # one pass over the (small) batch keys plans BOTH the bucket
-            # pruning and the tombstone bookkeeping the manifest carries
-            # for compact_tombstones — no second job
-            if (
-                bucket_hint is not None
-                and TOMBSTONE_COL not in upd.columns
-                and int(bucket_hint[0]) == n_buckets
-            ):
-                # caller already knows the batch's bucket set (e.g. the
-                # LSH admission path collected it for its own index
-                # pruning) — skip the bucket-probe job, which otherwise
-                # re-runs the whole batch lineage once before the write
-                # re-runs it again. Honored only when the hint was
-                # derived under the SAME n_buckets (a racing rebucket
-                # re-pins to a different count and the mapping moves)
-                # and the batch carries no tombstone column (the probe
-                # doubles as tombstone bookkeeping). A stale/short hint
-                # cannot corrupt: the staged-bucket validation below
-                # aborts the commit before publish.
-                touched = sorted({int(b) for b in bucket_hint[1]})
-                tomb_buckets = sorted(
-                    set(int(b) for b in snap.get("tombstone_buckets", []))
+        staging = new_dir("commit")
+        # one pass over the (small) batch keys plans BOTH the bucket
+        # pruning and the tombstone bookkeeping the manifest carries
+        # for compact_tombstones — no second job
+        if (
+            bucket_hint is not None
+            and TOMBSTONE_COL not in upd.columns
+            and int(bucket_hint[0]) == n_buckets
+        ):
+            # caller already knows the batch's bucket set (e.g. the
+            # LSH admission path collected it for its own index
+            # pruning) — skip the bucket-probe job, which otherwise
+            # re-runs the whole batch lineage once before the write
+            # re-runs it again. Honored only when the hint was
+            # derived under the SAME n_buckets (a racing rebucket
+            # re-pins to a different count and the mapping moves)
+            # and the batch carries no tombstone column (the probe
+            # doubles as tombstone bookkeeping). A stale/short hint
+            # cannot corrupt: the staged-bucket validation below
+            # aborts the commit before publish.
+            touched = sorted({int(b) for b in bucket_hint[1]})
+            tomb_buckets = sorted(
+                set(int(b) for b in snap.get("tombstone_buckets", []))
+            )
+        else:
+            tomb_flag = (
+                F.coalesce(
+                    F.col(TOMBSTONE_COL).cast("boolean"), F.lit(False)
+                )
+                if TOMBSTONE_COL in upd.columns
+                else F.lit(False)
+            )
+            bucket_info = (
+                upd.groupBy("bucket")
+                .agg(F.max(tomb_flag).alias("has_tomb"))
+                .collect()
+            )
+            touched = sorted(r.bucket for r in bucket_info)
+            tomb_buckets = sorted(
+                set(int(b) for b in snap.get("tombstone_buckets", []))
+                | {r.bucket for r in bucket_info if r.has_tomb}
+            )
+        base_files = [
+            f for b in touched for f in snap["buckets"].get(str(b), [])
+        ]
+        # THIS commit's column epochs, computed BEFORE the base
+        # read: carried columns keep their birth version; columns
+        # NEW to this commit (evolve-add, or a RE-ADD of a dropped
+        # name) are born at next_version. The base read must use
+        # THESE epochs, not the pinned snapshot's — the snapshot
+        # has no entry for a column this merge introduces, and an
+        # entry-less column would default to trusted, so a re-add
+        # would read the dropped incarnation's stale bytes out of
+        # old file groups and PERSIST them into the rewrite
+        # (caught by the protocol model fuzz, seed 1337).
+        snap_epochs = snap.get("column_epochs") or {}
+        # legacy manifests record no schema (expected is None): every
+        # batch column is a carried column there — stamping them at
+        # next_version would make _read_files_aligned NULL every base
+        # column (key included) and fold the table into NULL-keyed
+        # rows. Only a column absent from a RECORDED prior schema is
+        # genuinely new.
+        new_epochs = {
+            c: (
+                next_version
+                if expected is not None and c not in expected
+                else int(snap_epochs.get(c, 1))
+            )
+            for c in res_columns
+        }
+        base_df = None
+        if base_files:
+            # aligned, not a plain read: files written before a
+            # schema evolution physically lack added columns / carry
+            # narrower widened types — and pending MOR deletes apply
+            # BEFORE the merge fold, so this rewrite applies them
+            # physically (its buckets' sidecars clear below) and a
+            # deleted key patched/updated here re-inserts fresh
+            # rather than carrying dead values
+            base_df = _read_visible_base(
+                spark, snap, base_files, cols, res_types,
+                new_epochs, snap.get("file_versions"),
+            )
+        if patch_cols is not None:
+            # fill the carry columns from the pinned snapshot's
+            # visible rows (one row per key by the merge invariant).
+            # Duplicate batch keys need no pre-dedup: both rows get
+            # identical carry values — and, under identity_col, the
+            # same minted id (dense_rank below is per-key) — so the
+            # final latest-wins window picks the same winner it
+            # would after a dedup, with the same identity.
+            carry = [c for c in cols if c not in upd.columns]
+            carry_data = [c for c in carry if c != TOMBSTONE_COL]
+            if base_df is not None and carry_data:
+                upd = upd.join(
+                    _visible_rows(base_df).select(key_col, *carry_data),
+                    on=key_col,
+                    how="left",
                 )
             else:
-                tomb_flag = (
-                    F.coalesce(
-                        F.col(TOMBSTONE_COL).cast("boolean"), F.lit(False)
-                    )
-                    if TOMBSTONE_COL in upd.columns
-                    else F.lit(False)
+                for c in carry_data:
+                    upd = upd.withColumn(c, F.lit(None).cast(res_types[c]))
+            if TOMBSTONE_COL in carry:
+                # a patch row is a live upsert: the key's previous
+                # tombstone state never carries (visible rows are
+                # all live, tombstoned/new keys re-insert live)
+                upd = upd.withColumn(
+                    TOMBSTONE_COL, F.lit(None).cast(res_types[TOMBSTONE_COL])
                 )
-                bucket_info = (
-                    upd.groupBy("bucket")
-                    .agg(F.max(tomb_flag).alias("has_tomb"))
-                    .collect()
-                )
-                touched = sorted(r.bucket for r in bucket_info)
-                tomb_buckets = sorted(
-                    set(int(b) for b in snap.get("tombstone_buckets", []))
-                    | {r.bucket for r in bucket_info if r.has_tomb}
-                )
-            base_files = [
-                f for b in touched for f in snap["buckets"].get(str(b), [])
-            ]
-            # THIS commit's column epochs, computed BEFORE the base
-            # read: carried columns keep their birth version; columns
-            # NEW to this commit (evolve-add, or a RE-ADD of a dropped
-            # name) are born at next_version. The base read must use
-            # THESE epochs, not the pinned snapshot's — the snapshot
-            # has no entry for a column this merge introduces, and an
-            # entry-less column would default to trusted, so a re-add
-            # would read the dropped incarnation's stale bytes out of
-            # old file groups and PERSIST them into the rewrite
-            # (caught by the protocol model fuzz, seed 1337).
-            snap_epochs = snap.get("column_epochs") or {}
-            # legacy manifests record no schema (expected is None): every
-            # batch column is a carried column there — stamping them at
-            # next_version would make _read_files_aligned NULL every base
-            # column (key included) and fold the table into NULL-keyed
-            # rows. Only a column absent from a RECORDED prior schema is
-            # genuinely new.
-            new_epochs = {
-                c: (
-                    next_version
-                    if expected is not None and c not in expected
-                    else int(snap_epochs.get(c, 1))
-                )
-                for c in res_columns
-            }
-            base_df = None
-            if base_files:
-                # aligned, not a plain read: files written before a
-                # schema evolution physically lack added columns / carry
-                # narrower widened types — and pending MOR deletes apply
-                # BEFORE the merge fold, so this rewrite applies them
-                # physically (its buckets' sidecars clear below) and a
-                # deleted key patched/updated here re-inserts fresh
-                # rather than carrying dead values
-                base_df = _read_visible_base(
-                    spark, snap, base_files, cols, res_types,
-                    new_epochs, snap.get("file_versions"),
-                )
-            if patch_cols is not None:
-                # fill the carry columns from the pinned snapshot's
-                # visible rows (one row per key by the merge invariant).
-                # Duplicate batch keys need no pre-dedup: both rows get
-                # identical carry values — and, under identity_col, the
-                # same minted id (dense_rank below is per-key) — so the
-                # final latest-wins window picks the same winner it
-                # would after a dedup, with the same identity.
-                carry = [c for c in cols if c not in upd.columns]
-                carry_data = [c for c in carry if c != TOMBSTONE_COL]
-                if base_df is not None and carry_data:
-                    upd = upd.join(
-                        _visible_rows(base_df).select(key_col, *carry_data),
-                        on=key_col,
-                        how="left",
-                    )
-                else:
-                    for c in carry_data:
-                        upd = upd.withColumn(c, F.lit(None).cast(res_types[c]))
-                if TOMBSTONE_COL in carry:
-                    # a patch row is a live upsert: the key's previous
-                    # tombstone state never carries (visible rows are
-                    # all live, tombstoned/new keys re-insert live)
-                    upd = upd.withColumn(
-                        TOMBSTONE_COL, F.lit(None).cast(res_types[TOMBSTONE_COL])
-                    )
-            ident = snap.get("identity_col")
-            # legacy manifests (identity declared, mark missing) start
-            # at 0 rather than crashing the arithmetic below
-            new_hw = (
-                int(snap.get("identity_high_water") or 0)
-                if ident is not None
-                else None
+        ident = snap.get("identity_col")
+        # legacy manifests (identity declared, mark missing) start
+        # at 0 rather than crashing the arithmetic below
+        new_hw = (
+            int(snap.get("identity_high_water") or 0)
+            if ident is not None
+            else None
+        )
+        if (
+            patch_cols is not None
+            and ident is not None
+            and ident not in updates.columns
+        ):
+            # identity assignment: matched keys carried their id in
+            # the join above; NEW keys (NULL id) take
+            # high_water + dense_rank-by-key — a window over ONLY
+            # the batch's unmatched rows (bounded by batch size, the
+            # one place a single-partition window is provably
+            # bounded); dense_rank (not row_number) so duplicate
+            # batch rows for the same new key mint ONE id — no
+            # high-water gaps, and the latest-wins winner's id is
+            # tiebreak-independent. The advanced mark publishes WITH
+            # this commit's manifest, so a lost CAS re-pins the
+            # winner's mark and re-assigns — two racing inserters
+            # can never mint the same id (raced in
+            # tests/test_lakehouse.py)
+            upd, new_hw = _mint_identities(
+                upd, ident, key_col, new_hw, res_types[ident]
             )
-            if (
-                patch_cols is not None
-                and ident is not None
-                and ident not in updates.columns
-            ):
-                # identity assignment: matched keys carried their id in
-                # the join above; NEW keys (NULL id) take
-                # high_water + dense_rank-by-key — a window over ONLY
-                # the batch's unmatched rows (bounded by batch size, the
-                # one place a single-partition window is provably
-                # bounded); dense_rank (not row_number) so duplicate
-                # batch rows for the same new key mint ONE id — no
-                # high-water gaps, and the latest-wins winner's id is
-                # tiebreak-independent. The advanced mark publishes WITH
-                # this commit's manifest, so a lost CAS re-pins the
-                # winner's mark and re-assigns — two racing inserters
-                # can never mint the same id (raced in
-                # tests/test_lakehouse.py)
+        elif ident is not None and ident in upd.columns:
+            # full-row mode: the batch carries caller-managed ids —
+            # keep the invariant hw >= every assigned id, then close
+            # the NULL-id hole: rows arriving without an id first
+            # re-adopt the key's existing id from the pinned
+            # snapshot (so a full-row rewrite cannot silently change
+            # a key's identity), and genuinely new keys mint from
+            # the raised mark exactly like the patch path — a
+            # full-row batch can never publish NULL identities
+            # one batch pass answers both questions (max assigned
+            # id AND does-any-row-lack-one) — this ran as two jobs
+            idstat = upd.agg(
+                F.max(ident).alias("m"),
+                F.sum(F.col(ident).isNull().cast("int")).alias("nn"),
+            ).first()
+            if idstat.m is not None:
+                new_hw = max(new_hw or 0, int(idstat.m))
+            if int(idstat.nn or 0) > 0:
+                if base_df is not None:
+                    existing = _visible_rows(base_df).select(
+                        key_col, F.col(ident).alias("__existing_id")
+                    )
+                    upd = (
+                        upd.join(existing, on=key_col, how="left")
+                        .withColumn(
+                            ident,
+                            F.coalesce(
+                                F.col(ident),
+                                F.col("__existing_id").cast(
+                                    res_types[ident]
+                                ),
+                            ),
+                        )
+                        .drop("__existing_id")
+                    )
                 upd, new_hw = _mint_identities(
                     upd, ident, key_col, new_hw, res_types[ident]
                 )
-            elif ident is not None and ident in upd.columns:
-                # full-row mode: the batch carries caller-managed ids —
-                # keep the invariant hw >= every assigned id, then close
-                # the NULL-id hole: rows arriving without an id first
-                # re-adopt the key's existing id from the pinned
-                # snapshot (so a full-row rewrite cannot silently change
-                # a key's identity), and genuinely new keys mint from
-                # the raised mark exactly like the patch path — a
-                # full-row batch can never publish NULL identities
-                # one batch pass answers both questions (max assigned
-                # id AND does-any-row-lack-one) — this ran as two jobs
-                idstat = upd.agg(
-                    F.max(ident).alias("m"),
-                    F.sum(F.col(ident).isNull().cast("int")).alias("nn"),
-                ).first()
-                if idstat.m is not None:
-                    new_hw = max(new_hw or 0, int(idstat.m))
-                if int(idstat.nn or 0) > 0:
-                    if base_df is not None:
-                        existing = _visible_rows(base_df).select(
-                            key_col, F.col(ident).alias("__existing_id")
-                        )
-                        upd = (
-                            upd.join(existing, on=key_col, how="left")
-                            .withColumn(
-                                ident,
-                                F.coalesce(
-                                    F.col(ident),
-                                    F.col("__existing_id").cast(
-                                        res_types[ident]
-                                    ),
-                                ),
-                            )
-                            .drop("__existing_id")
-                        )
-                    upd, new_hw = _mint_identities(
-                        upd, ident, key_col, new_hw, res_types[ident]
-                    )
-            unioned = upd
-            if base_df is not None:
-                unioned = base_df.withColumn(
-                    "bucket", _bucket_of(key_col, n_buckets)
-                ).unionByName(upd)
-            # the lazy plan writes straight to staging: pinned base
-            # files are IMMUTABLE under the protocol (commits only add
-            # files and publish manifests; only vacuum deletes), so no
-            # checkpoint barrier is needed — a materialize-then-rewrite
-            # here would double the commit path's I/O for nothing
-            ccol = snap.get("cluster_col")
-            if ccol is None:
-                # latest-wins winner selection FUSED into the write's
-                # bucket exchange: one shuffle of the commit's bytes
-                # instead of two (window-by-key, then
-                # repartition-by-bucket) — guide §2.4; grouping
-                # equivalence argued in _write_clustered's docstring
-                _write_clustered(
-                    unioned, staging, key_col, write_salt, n_buckets,
-                    None, snap.get("cluster_bins", 4),
-                    latest_wins=(ver_col, tiebreak_col),
-                )
-            else:
-                # a key's rows can land in different range bins, so
-                # the winner must be chosen before the bin exchange
-                w = Window.partitionBy(key_col).orderBy(
-                    F.col(ver_col).desc(), F.col(tiebreak_col)
-                )
-                merged = (
-                    unioned.withColumn("rn", F.row_number().over(w))
-                    .filter(F.col("rn") == 1)
-                    .drop("rn")
-                )
-                _write_clustered(
-                    merged, staging, key_col, write_salt, n_buckets,
-                    ccol, snap.get("cluster_bins", 4),
-                )
-        except Exception as ex:
-            shutil.rmtree(staging, ignore_errors=True)
-            if _is_missing_file_error(ex):
-                # a vacuum expired our pinned version mid-read (see
-                # docstring): same remedy as a lost CAS — re-pin + retry
-                continue
-            raise
+        unioned = upd
+        if base_df is not None:
+            unioned = base_df.withColumn(
+                "bucket", _bucket_of(key_col, n_buckets)
+            ).unionByName(upd)
+        # the lazy plan writes straight to staging: pinned base
+        # files are IMMUTABLE under the protocol (commits only add
+        # files and publish manifests; only vacuum deletes), so no
+        # checkpoint barrier is needed — a materialize-then-rewrite
+        # here would double the commit path's I/O for nothing
+        ccol = snap.get("cluster_col")
+        if ccol is None:
+            # latest-wins winner selection FUSED into the write's
+            # bucket exchange: one shuffle of the commit's bytes
+            # instead of two (window-by-key, then
+            # repartition-by-bucket) — guide §2.4; grouping
+            # equivalence argued in _write_clustered's docstring
+            _write_clustered(
+                unioned, staging, key_col, write_salt, n_buckets,
+                None, snap.get("cluster_bins", 4),
+                latest_wins=(ver_col, tiebreak_col),
+            )
+        else:
+            # a key's rows can land in different range bins, so
+            # the winner must be chosen before the bin exchange
+            w = Window.partitionBy(key_col).orderBy(
+                F.col(ver_col).desc(), F.col(tiebreak_col)
+            )
+            merged = (
+                unioned.withColumn("rn", F.row_number().over(w))
+                .filter(F.col("rn") == 1)
+                .drop("rn")
+            )
+            _write_clustered(
+                merged, staging, key_col, write_salt, n_buckets,
+                ccol, snap.get("cluster_bins", 4),
+            )
         new_files = _list_bucket_files(staging)
         # every staged bucket must be in the touched set: the manifest
         # update below only replaces touched buckets, so a stray staged
         # bucket (stale/short bucket_hint, or a bucket-derivation bug)
         # would orphan its file while the bucket's base rows survive —
-        # losing the batch's rows for that bucket. Abort pre-publish.
+        # losing the batch's rows for that bucket. Abort pre-publish
+        # (not retried: _commit removes the staging and re-raises).
         stray = sorted(set(new_files) - set(touched))
         if stray:
-            shutil.rmtree(staging, ignore_errors=True)
             raise AssertionError(
                 f"commit staged buckets {stray} outside the touched set "
                 f"{touched} (stale bucket_hint?); publishing would lose "
@@ -3161,7 +3251,7 @@ def merge_upsert_manifest(
             "key_col": key_col,
             "columns": list(res_columns),
             "column_types": {c: res_types[c] for c in res_columns},
-            "buckets": {k: buckets[k] for k in sorted(buckets, key=int)},
+            "buckets": _bucket_map(buckets),
             # buckets that MAY hold live tombstone rows — a conservative
             # over-approximation maintained commit-side so
             # compact_tombstones never scans the whole table to find
@@ -3170,64 +3260,37 @@ def merge_upsert_manifest(
         }
         # column epochs: computed above, BEFORE the base read used them
         manifest["column_epochs"] = new_epochs
-        # pending MOR deletes: this rewrite applied the touched
-        # buckets' sidecars physically (base_df above), so only
-        # untouched buckets' sidecars carry forward
-        dels = {
-            b: fs
-            for b, fs in (snap.get("delete_files") or {}).items()
-            if int(b) not in set(touched) and fs
-        }
-        if dels:
-            manifest["delete_files"] = {
-                k: dels[k] for k in sorted(dels, key=int)
-            }
-        # positional deletion vectors follow the same rewrite contract
-        dvs = {
-            b: fs
-            for b, fs in (snap.get("dv_files") or {}).items()
-            if int(b) not in set(touched) and fs
-        }
-        if dvs:
-            manifest["dv_files"] = {
-                k: dvs[k] for k in sorted(dvs, key=int)
-            }
+        # pending MOR deletes and deletion vectors: this rewrite applied
+        # the touched buckets' sidecars physically (base_df above)
+        _carry_pending_deletes(manifest, snap, set(touched))
         if ident is not None:
             manifest["identity_col"] = ident
             manifest["identity_high_water"] = int(new_hw or 0)
-        qpath = None
         if gate_stats is not None:
+            qpath = None
             if gate_stats["quarantined"]:
                 # attempt-private like commit staging (same collision
                 # reasoning as _staging_path's docstring); the manifest
                 # pins the winning attempt's dir, vacuum reclaims it
                 # with the version
-                qpath = _staging_path(
-                    base_dir, "quarantine", next_version, writer_id, attempt
-                )
+                qpath = new_dir("quarantine")
                 quarantined.write.mode("error").parquet(qpath)
             manifest["expectations"] = {**gate_stats, "path": qpath}
         _attach_sidecars(spark, snap, manifest, buckets, staging)
-        if before_commit is not None:
-            before_commit(attempt)
-        if _publish_manifest(base_dir, manifest):
-            return next_version, attempt + 1
-        # lost the CAS: a competing commit moved the version — drop this
-        # attempt's unreferenced staging files (they are in NO manifest,
-        # so vacuum would never reclaim them) and re-merge against the
-        # winner's manifest
-        shutil.rmtree(staging, ignore_errors=True)
-        if qpath is not None:
-            shutil.rmtree(qpath, ignore_errors=True)
-        if isolation == "serializable":
-            # gated on the POST-expectations batch: quarantined rows
-            # never commit, so they cannot lose an update either
-            _check_serializable(
-                spark, base_dir, snap["version"], updates, key_col,
-                writer_id, bucket_hint=(n_buckets, touched),
-            )
-    raise MergeConflictError(
-        f"merge by {writer_id} lost the commit race {max_retries + 1} times"
+        return manifest, next_version
+
+    def check_serializable(snap):
+        # gated on the POST-expectations batch: quarantined rows never
+        # commit, so they cannot lose an update either
+        _check_serializable(
+            spark, base_dir, snap["version"], updates, snap["key_col"],
+            writer_id, bucket_hint=(snap["n_buckets"], touched),
+        )
+
+    return _commit(
+        base_dir, writer_id, f"merge by {writer_id}", stage,
+        max_retries=max_retries, before_commit=before_commit,
+        after_lost=check_serializable if isolation == "serializable" else None,
     )
 
 
@@ -3255,66 +3318,57 @@ def compact_tombstones(
     Returns ``{"version", "buckets_compacted", "tombstones_dropped"}``;
     a table with no flagged buckets returns its current version with
     no new commit."""
-    import shutil
-
     tomb = F.coalesce(F.col(TOMBSTONE_COL).cast("boolean"), F.lit(False))
-    for attempt in range(max_retries + 1):
-        snap = load_manifest(base_dir)
+
+    def stage(snap, new_dir):
         key_col, n_buckets = snap["key_col"], snap["n_buckets"]
         cols_, types_ = snap["columns"], snap["column_types"]
         candidates = sorted(int(b) for b in snap.get("tombstone_buckets", []))
         if not candidates or TOMBSTONE_COL not in types_:
-            return {
+            return None, {
                 "version": snap["version"],
                 "buckets_compacted": [],
                 "tombstones_dropped": 0,
             }
         next_version = snap["version"] + 1
-        staging = _staging_path(base_dir, "compact", next_version, writer_id, attempt)
-        try:
-            files = [
-                f for b in candidates for f in snap["buckets"].get(str(b), [])
-            ]
-            df = _read_visible_base(
-                spark, snap, files, cols_, types_,
-                snap.get("column_epochs"), snap.get("file_versions"),
-            ).withColumn("bucket", _bucket_of(key_col, n_buckets))
-            per = {
-                r.bucket: r.n
-                for r in df.groupBy("bucket")
-                .agg(F.sum(tomb.cast("int")).alias("n"))
-                .collect()
-            }
-            doomed = sorted(b for b, n in per.items() if n)
-            dropped = int(sum(per[b] for b in doomed))
-            if not doomed:
-                # flags were conservative over-approximations (the
-                # tombstones lost latest-wins at some later merge) —
-                # clear them with a metadata-only commit
-                # per-commit records never carry into a new commit
-                manifest = _strip_commit_records(
-                    {**snap, "version": next_version,
-                     "commit_kind": "compact",
-                     "writer_id": writer_id,
-                     "tombstone_buckets": []}
-                )
-                if _publish_manifest(base_dir, manifest):
-                    return {
-                        "version": next_version,
-                        "buckets_compacted": [],
-                        "tombstones_dropped": 0,
-                    }
-                continue
-            live = df.filter(F.col("bucket").isin(doomed)).filter(~tomb)
-            _write_clustered(
-                live, staging, key_col, 1, n_buckets,
-                snap.get("cluster_col"), snap.get("cluster_bins", 4),
+        files = [
+            f for b in candidates for f in snap["buckets"].get(str(b), [])
+        ]
+        df = _read_visible_base(
+            spark, snap, files, cols_, types_,
+            snap.get("column_epochs"), snap.get("file_versions"),
+        ).withColumn("bucket", _bucket_of(key_col, n_buckets))
+        per = {
+            r.bucket: r.n
+            for r in df.groupBy("bucket")
+            .agg(F.sum(tomb.cast("int")).alias("n"))
+            .collect()
+        }
+        doomed = sorted(b for b, n in per.items() if n)
+        dropped = int(sum(per[b] for b in doomed))
+        result = {
+            "version": next_version,
+            "buckets_compacted": doomed,
+            "tombstones_dropped": dropped,
+        }
+        if not doomed:
+            # flags were conservative over-approximations (the
+            # tombstones lost latest-wins at some later merge) — clear
+            # them with a metadata-only commit; per-commit records
+            # never carry into a new commit
+            manifest = _strip_commit_records(
+                {**snap, "version": next_version,
+                 "commit_kind": "compact",
+                 "writer_id": writer_id,
+                 "tombstone_buckets": []}
             )
-        except Exception as ex:
-            shutil.rmtree(staging, ignore_errors=True)
-            if _is_missing_file_error(ex):
-                continue  # vacuum expired the pin mid-read: re-pin
-            raise
+            return manifest, result
+        staging = new_dir("compact")
+        live = df.filter(F.col("bucket").isin(doomed)).filter(~tomb)
+        _write_clustered(
+            live, staging, key_col, 1, n_buckets,
+            snap.get("cluster_col"), snap.get("cluster_bins", 4),
+        )
         new_files = _list_bucket_files(staging)
         buckets = dict(snap["buckets"])
         for b in doomed:
@@ -3328,42 +3382,20 @@ def compact_tombstones(
             "key_col": key_col,
             "columns": list(cols_),
             "column_types": dict(types_),
-            "buckets": {k: buckets[k] for k in sorted(buckets, key=int)},
+            "buckets": _bucket_map(buckets),
             "tombstone_buckets": [],
             "column_epochs": snap.get("column_epochs")
             or {c: 1 for c in cols_},
         }
-        # rewritten buckets applied their pending MOR deletes; carry
-        # the rest
-        dels = {
-            b: fs
-            for b, fs in (snap.get("delete_files") or {}).items()
-            if int(b) not in set(doomed) and fs
-        }
-        if dels:
-            manifest["delete_files"] = {
-                k: dels[k] for k in sorted(dels, key=int)
-            }
-        dvs = {
-            b: fs
-            for b, fs in (snap.get("dv_files") or {}).items()
-            if int(b) not in set(doomed) and fs
-        }
-        if dvs:
-            manifest["dv_files"] = {
-                k: dvs[k] for k in sorted(dvs, key=int)
-            }
+        # rewritten buckets applied their pending deletes; carry the rest
+        _carry_pending_deletes(manifest, snap, set(doomed))
         _attach_sidecars(spark, snap, manifest, buckets, staging)
-        if _publish_manifest(base_dir, manifest):
-            return {
-                "version": next_version,
-                "buckets_compacted": doomed,
-                "tombstones_dropped": dropped,
-            }
-        shutil.rmtree(staging, ignore_errors=True)
-    raise MergeConflictError(
-        f"compaction by {writer_id} lost the commit race {max_retries + 1} times"
-    )
+        return manifest, result
+
+    return _commit(
+        base_dir, writer_id, f"compaction by {writer_id}", stage,
+        max_retries=max_retries,
+    )[0]
 
 
 def optimize_compact(
@@ -3409,10 +3441,7 @@ def optimize_compact(
     Returns ``{"version", "buckets_optimized", "files_before",
     "files_after", "sidecars_coalesced"}``; a table with nothing to
     pack or coalesce returns its current version with no new commit."""
-    import shutil
-
-    for attempt in range(max_retries + 1):
-        snap = load_manifest(base_dir)
+    def stage(snap, new_dir):
         key_col, n_buckets = snap["key_col"], snap["n_buckets"]
         cols_, types_ = snap["columns"], snap["column_types"]
         fragmented = sorted(
@@ -3434,7 +3463,7 @@ def optimize_compact(
         )
         n_before = sum(len(fs) for fs in snap["buckets"].values())
         if not fragmented and not side_frag and not dv_frag:
-            return {
+            return None, {
                 "version": snap["version"],
                 "buckets_optimized": [],
                 "files_before": n_before,
@@ -3442,162 +3471,114 @@ def optimize_compact(
                 "sidecars_coalesced": [],
                 "dv_coalesced": [],
             }
-        next_version = snap["version"] + 1
-        staging = _staging_path(
-            base_dir, "optimize", next_version, writer_id, attempt
-        )
-        del_staging = None
-        dv_staging = None
-        try:
-            if fragmented:
-                files = [
-                    f for b in fragmented for f in snap["buckets"][str(b)]
-                ]
-                # pending MOR deletes of the rewritten buckets apply
-                # physically here (visible rows unchanged — they were
-                # already hidden at read); their sidecars clear below
-                df = _read_visible_base(
-                    spark, snap, files, cols_, types_,
-                    snap.get("column_epochs"),
-                    snap.get("file_versions"),
-                ).withColumn("bucket", _bucket_of(key_col, n_buckets))
-                _write_clustered(
-                    df, staging, key_col, 1, n_buckets,
-                    snap.get("cluster_col"), snap.get("cluster_bins", 4),
-                )
-            del_new: dict[int, list] = {}
-            dv_new: dict[int, list] = {}
-            if dv_frag:
-                # deletion-vector sidecars coalesce by BIT_OR folding
-                # the per-(file, word) bitmap slots — one job over
-                # O(pending deleted rows / 64) words. The file column
-                # keys each word to its data file, and a file belongs
-                # to exactly one bucket, so re-deriving the bucket from
-                # the sidecar's own partition layout is unnecessary:
-                # fold per bucket's files directly
-                dv_staging = _staging_path(
-                    base_dir, "optdv", next_version, writer_id, attempt
-                )
-                bdf = spark.createDataFrame(
-                    [
-                        (f, int(b))
-                        for b in dv_frag
-                        for f in snap["buckets"].get(str(b), [])
-                    ],
-                    "file string, bucket int",
-                )
-                dv_files_in = [
-                    f for b in dv_frag for f in dvs_all[str(b)]
-                ]
-                (
-                    spark.read.parquet(*dv_files_in)
-                    .groupBy("file", "w")
-                    .agg(F.bit_or("word").alias("word"))
-                    # vectors only survive while their bucket is
-                    # unrewritten, so every referenced file is still a
-                    # current bucket file — the inner join drops nothing
-                    .join(F.broadcast(bdf), "file")
-                    .repartition(F.col("bucket"))
-                    .write.mode("overwrite")
-                    .partitionBy("bucket")
-                    .parquet(dv_staging)
-                )
-                dv_new = _list_bucket_files(dv_staging)
-            if side_frag:
-                # one job over O(pending deleted keys): keys re-derive
-                # their own bucket (sidecars are bucket-scoped by the
-                # same hash), so the rewrite is the delete_keys_mor
-                # write shape with a fresh attempt-private dir
-                del_staging = _staging_path(
-                    base_dir, "optdel", next_version, writer_id, attempt
-                )
-                side_files = [
-                    f for b in side_frag for f in dels_all[str(b)]
-                ]
-                (
-                    spark.read.parquet(*side_files)
-                    .select(key_col)
-                    .distinct()
-                    .withColumn("bucket", _bucket_of(key_col, n_buckets))
-                    .repartition(F.col("bucket"))
-                    .write.mode("overwrite")
-                    .partitionBy("bucket")
-                    .parquet(del_staging)
-                )
-                del_new = _list_bucket_files(del_staging)
-        except Exception as ex:
-            shutil.rmtree(staging, ignore_errors=True)
-            if del_staging is not None:
-                shutil.rmtree(del_staging, ignore_errors=True)
-            if dv_staging is not None:
-                shutil.rmtree(dv_staging, ignore_errors=True)
-            if _is_missing_file_error(ex):
-                continue  # vacuum expired the pin mid-read: re-pin
-            raise
-        new_files = _list_bucket_files(staging) if fragmented else {}
         buckets = dict(snap["buckets"])
-        for b in fragmented:
-            buckets[str(b)] = new_files.get(b, [])
+        if fragmented:
+            staging = new_dir("optimize")
+            files = [f for b in fragmented for f in snap["buckets"][str(b)]]
+            # pending MOR deletes of the rewritten buckets apply
+            # physically here (visible rows unchanged — they were
+            # already hidden at read); their sidecars clear below
+            df = _read_visible_base(
+                spark, snap, files, cols_, types_,
+                snap.get("column_epochs"),
+                snap.get("file_versions"),
+            ).withColumn("bucket", _bucket_of(key_col, n_buckets))
+            _write_clustered(
+                df, staging, key_col, 1, n_buckets,
+                snap.get("cluster_col"), snap.get("cluster_bins", 4),
+            )
+            new_files = _list_bucket_files(staging)
+            for b in fragmented:
+                buckets[str(b)] = new_files.get(b, [])
+        dv_new: dict[int, list] = {}
+        if dv_frag:
+            # deletion-vector sidecars coalesce by BIT_OR folding the
+            # per-(file, word) bitmap slots — one job over O(pending
+            # deleted rows / 64) words. The file column keys each word
+            # to its data file, and a file belongs to exactly one
+            # bucket, so re-deriving the bucket from the sidecar's own
+            # partition layout is unnecessary: fold per bucket's files
+            # directly
+            dv_staging = new_dir("optdv")
+            bdf = spark.createDataFrame(
+                [
+                    (f, int(b))
+                    for b in dv_frag
+                    for f in snap["buckets"].get(str(b), [])
+                ],
+                "file string, bucket int",
+            )
+            (
+                spark.read.parquet(
+                    *[f for b in dv_frag for f in dvs_all[str(b)]]
+                )
+                .groupBy("file", "w")
+                .agg(F.bit_or("word").alias("word"))
+                # vectors only survive while their bucket is
+                # unrewritten, so every referenced file is still a
+                # current bucket file — the inner join drops nothing
+                .join(F.broadcast(bdf), "file")
+                .repartition(F.col("bucket"))
+                .write.mode("overwrite")
+                .partitionBy("bucket")
+                .parquet(dv_staging)
+            )
+            dv_new = _list_bucket_files(dv_staging)
+        del_new: dict[int, list] = {}
+        if side_frag:
+            # one job over O(pending deleted keys): keys re-derive their
+            # own bucket (sidecars are bucket-scoped by the same hash),
+            # so the rewrite is the delete_keys_mor write shape with a
+            # fresh attempt-private dir
+            del_staging = new_dir("optdel")
+            (
+                spark.read.parquet(
+                    *[f for b in side_frag for f in dels_all[str(b)]]
+                )
+                .select(key_col)
+                .distinct()
+                .withColumn("bucket", _bucket_of(key_col, n_buckets))
+                .repartition(F.col("bucket"))
+                .write.mode("overwrite")
+                .partitionBy("bucket")
+                .parquet(del_staging)
+            )
+            del_new = _list_bucket_files(del_staging)
         manifest = _strip_commit_records(
             {
                 **snap,
-                "version": next_version,
+                "version": snap["version"] + 1,
                 "commit_kind": "optimize",
                 "writer_id": writer_id,
-                "buckets": {k: buckets[k] for k in sorted(buckets, key=int)},
+                "buckets": _bucket_map(buckets),
             }
         )
-        dels = {
-            b: fs
-            for b, fs in dels_all.items()
-            if int(b) not in set(fragmented) and fs
-        }
-        for b in side_frag:
-            # an all-duplicate sidecar set can coalesce to zero files
-            # for a bucket whose keys were empty — drop the entry
-            dels[str(b)] = del_new.get(b, [])
-        dels = {b: fs for b, fs in dels.items() if fs}
-        manifest.pop("delete_files", None)
-        if dels:
-            manifest["delete_files"] = {
-                k: dels[k] for k in sorted(dels, key=int)
-            }
-        dvs = {
-            b: fs
-            for b, fs in dvs_all.items()
-            if int(b) not in set(fragmented) and fs
-        }
-        for b in dv_frag:
-            dvs[str(b)] = dv_new.get(b, [])
-        dvs = {b: fs for b, fs in dvs.items() if fs}
-        manifest.pop("dv_files", None)
-        if dvs:
-            manifest["dv_files"] = {
-                k: dvs[k] for k in sorted(dvs, key=int)
-            }
+        # an all-duplicate sidecar set can coalesce to zero files for a
+        # bucket whose keys were empty — the carry drops the entry
+        _carry_pending_deletes(
+            manifest, snap, set(fragmented),
+            coalesced={
+                "delete_files": {b: del_new.get(b, []) for b in side_frag},
+                "dv_files": {b: dv_new.get(b, []) for b in dv_frag},
+            },
+        )
         if fragmented:
             _attach_sidecars(spark, snap, manifest, buckets, staging)
         # sidecar-only commits change no data files: every per-file
         # sidecar map carried verbatim by the {**snap} copy stays exact
-        if before_commit is not None:
-            before_commit(attempt)
-        if _publish_manifest(base_dir, manifest):
-            return {
-                "version": next_version,
-                "buckets_optimized": fragmented,
-                "files_before": n_before,
-                "files_after": sum(len(fs) for fs in buckets.values()),
-                "sidecars_coalesced": side_frag,
-                "dv_coalesced": dv_frag,
-            }
-        shutil.rmtree(staging, ignore_errors=True)
-        if del_staging is not None:
-            shutil.rmtree(del_staging, ignore_errors=True)
-        if dv_staging is not None:
-            shutil.rmtree(dv_staging, ignore_errors=True)
-    raise MergeConflictError(
-        f"optimize by {writer_id} lost the commit race {max_retries + 1} times"
-    )
+        return manifest, {
+            "version": manifest["version"],
+            "buckets_optimized": fragmented,
+            "files_before": n_before,
+            "files_after": sum(len(fs) for fs in buckets.values()),
+            "sidecars_coalesced": side_frag,
+            "dv_coalesced": dv_frag,
+        }
+
+    return _commit(
+        base_dir, writer_id, f"optimize by {writer_id}", stage,
+        max_retries=max_retries, before_commit=before_commit,
+    )[0]
 
 
 def drop_column(
@@ -3622,8 +3603,8 @@ def drop_column(
     bloom_col, identity_col, and the tombstone marker.
 
     Returns ``(committed_version, attempts)``."""
-    for attempt in range(max_retries + 1):
-        snap = load_manifest(base_dir)
+
+    def stage(snap, _new_dir):
         if col not in (snap.get("columns") or []):
             raise ValueError(
                 f"column {col!r} not in table schema {snap.get('columns')}"
@@ -3669,11 +3650,11 @@ def drop_column(
                 f: {c: s for c, s in d.items() if c != col}
                 for f, d in snap["column_stats"].items()
             }
-        if _publish_manifest(base_dir, manifest):
-            return manifest["version"], attempt + 1
-    raise MergeConflictError(
-        f"drop_column({col!r}) by {writer_id} lost the commit race "
-        f"{max_retries + 1} times"
+        return manifest, manifest["version"]
+
+    return _commit(
+        base_dir, writer_id, f"drop_column({col!r}) by {writer_id}", stage,
+        max_retries=max_retries,
     )
 
 
@@ -3707,16 +3688,10 @@ def delete_keys_mor(
 
     Returns ``(committed_version, attempts)``. Keys are deduplicated;
     deleting an absent key is a harmless no-op at read time."""
-    import shutil
-
-    for attempt in range(max_retries + 1):
-        snap = load_manifest(base_dir)
+    def stage(snap, new_dir):
         key_col, n_buckets = snap["key_col"], snap["n_buckets"]
         key_type = snap["column_types"][key_col]
-        next_version = snap["version"] + 1
-        staging = _staging_path(
-            base_dir, "mordel", next_version, writer_id, attempt
-        )
+        staging = new_dir("mordel")
         keys = (
             keys_df.select(
                 F.col(keys_df.columns[0]).cast(key_type).alias(key_col)
@@ -3730,30 +3705,26 @@ def delete_keys_mor(
             .partitionBy("bucket")
             .parquet(staging)
         )
-        new_files = _list_bucket_files(staging)
         dels = {
             b: list(fs)
             for b, fs in (snap.get("delete_files") or {}).items()
         }
-        for b, fs in new_files.items():
+        for b, fs in _list_bucket_files(staging).items():
             dels[str(b)] = dels.get(str(b), []) + fs
         manifest = _strip_commit_records(
             {
                 **snap,
-                "version": next_version,
+                "version": snap["version"] + 1,
                 "commit_kind": "delete",
                 "writer_id": writer_id,
-                "delete_files": {k: dels[k] for k in sorted(dels, key=int)},
+                "delete_files": _bucket_map(dels),
             }
         )
-        if before_commit is not None:
-            before_commit(attempt)
-        if _publish_manifest(base_dir, manifest):
-            return next_version, attempt + 1
-        shutil.rmtree(staging, ignore_errors=True)
-    raise MergeConflictError(
-        f"MOR delete by {writer_id} lost the commit race "
-        f"{max_retries + 1} times"
+        return manifest, manifest["version"]
+
+    return _commit(
+        base_dir, writer_id, f"MOR delete by {writer_id}", stage,
+        max_retries=max_retries, before_commit=before_commit,
     )
 
 
@@ -3800,10 +3771,8 @@ def replace_where_range(
       re-open the straggler window compact_tombstones closes.
 
     Returns ``(committed_version, attempts)``."""
-    import shutil
 
-    for attempt in range(max_retries + 1):
-        snap = load_manifest(base_dir)
+    def stage(snap, new_dir):
         key_col, n_buckets = snap["key_col"], snap["n_buckets"]
         cols_, types_ = snap["columns"], snap["column_types"]
         if col not in types_:
@@ -3827,112 +3796,104 @@ def replace_where_range(
                 f"replaceWhere constraint: {n_bad} batch rows lie "
                 f"outside {col} BETWEEN {lo!r} AND {hi!r}"
             )
-        next_version = snap["version"] + 1
-        staging = _staging_path(
-            base_dir, "replace", next_version, writer_id, attempt
-        )
-        try:
-            kept, _skipped = prune_files_by_column(snap, col, lo, hi)
-            keptset = set(kept)
-            bb = batch.withColumn("bucket", _bucket_of(key_col, n_buckets))
-            new_buckets = {
-                r.bucket for r in bb.select("bucket").distinct().collect()
-            }
-            dels_all = snap.get("delete_files") or {}
-            dvs_all = snap.get("dv_files") or {}
-            plan: dict[str, str] = {}
-            for b, fs in snap["buckets"].items():
-                has_kept = any(f in keptset for f in fs)
-                gets_new = int(b) in new_buckets
-                if not has_kept and not gets_new:
-                    plan[b] = "carry"
-                elif dels_all.get(b) or dvs_all.get(b):
-                    plan[b] = "full"
-                else:
-                    plan[b] = "partial"
-            # out-of-slice key-conflict check: visible rows sharing a
-            # batch key, restricted to the batch keys' buckets and the
-            # (key, col) columns — never a table scan
-            check_files = [
-                f
-                for b, fs in snap["buckets"].items()
-                if int(b) in new_buckets
-                for f in fs
-            ]
-            if check_files:
-                sub = list(
-                    dict.fromkeys(
-                        [key_col, col]
-                        + ([TOMBSTONE_COL] if TOMBSTONE_COL in types_ else [])
-                    )
+        kept, _skipped = prune_files_by_column(snap, col, lo, hi)
+        keptset = set(kept)
+        bb = batch.withColumn("bucket", _bucket_of(key_col, n_buckets))
+        new_buckets = {
+            r.bucket for r in bb.select("bucket").distinct().collect()
+        }
+        dels_all = snap.get("delete_files") or {}
+        dvs_all = snap.get("dv_files") or {}
+        plan: dict[str, str] = {}
+        for b, fs in snap["buckets"].items():
+            has_kept = any(f in keptset for f in fs)
+            gets_new = int(b) in new_buckets
+            if not has_kept and not gets_new:
+                plan[b] = "carry"
+            elif dels_all.get(b) or dvs_all.get(b):
+                plan[b] = "full"
+            else:
+                plan[b] = "partial"
+        # out-of-slice key-conflict check: visible rows sharing a
+        # batch key, restricted to the batch keys' buckets and the
+        # (key, col) columns — never a table scan
+        check_files = [
+            f
+            for b, fs in snap["buckets"].items()
+            if int(b) in new_buckets
+            for f in fs
+        ]
+        if check_files:
+            sub = list(
+                dict.fromkeys(
+                    [key_col, col]
+                    + ([TOMBSTONE_COL] if TOMBSTONE_COL in types_ else [])
                 )
-                probe = _visible_rows(
-                    _read_visible_base(
-                        spark, snap, check_files, sub,
-                        {c: types_[c] for c in sub},
-                        snap.get("column_epochs"),
-                        snap.get("file_versions"),
-                    )
+            )
+            probe = _visible_rows(
+                _read_visible_base(
+                    spark, snap, check_files, sub,
+                    {c: types_[c] for c in sub},
+                    snap.get("column_epochs"),
+                    snap.get("file_versions"),
                 )
-                clash = (
-                    probe.filter(out_of_slice)
-                    .join(
-                        F.broadcast(batch.select(key_col).distinct()),
-                        key_col,
-                        "inner",
-                    )
-                    .limit(5)
-                    .collect()
+            )
+            clash = (
+                probe.filter(out_of_slice)
+                .join(
+                    F.broadcast(batch.select(key_col).distinct()),
+                    key_col,
+                    "inner",
                 )
-                if clash:
-                    raise ValueError(
-                        "replaceWhere key conflict: batch keys "
-                        f"{sorted(r[0] for r in clash)} (sample) have "
-                        "visible rows OUTSIDE the slice; replace would "
-                        "either drop them (undeclared upsert) or "
-                        "duplicate the key"
-                    )
-            to_rewrite = [
-                f
-                for b, fs in snap["buckets"].items()
-                for f in fs
-                if plan[b] == "full" or (plan[b] == "partial" and f in keptset)
-            ]
-            nothing_staged = not to_rewrite and not new_buckets
-            parts = []
-            if to_rewrite:
-                base_df = _read_visible_base(
-                    spark, snap, to_rewrite, cols_, types_,
-                    snap.get("column_epochs"), snap.get("file_versions"),
+                .limit(5)
+                .collect()
+            )
+            if clash:
+                raise ValueError(
+                    "replaceWhere key conflict: batch keys "
+                    f"{sorted(r[0] for r in clash)} (sample) have "
+                    "visible rows OUTSIDE the slice; replace would "
+                    "either drop them (undeclared upsert) or "
+                    "duplicate the key"
                 )
-                tomb = (
-                    F.coalesce(
-                        F.col(TOMBSTONE_COL).cast("boolean"), F.lit(False)
-                    )
-                    if TOMBSTONE_COL in types_
-                    else F.lit(False)
+        to_rewrite = [
+            f
+            for b, fs in snap["buckets"].items()
+            for f in fs
+            if plan[b] == "full" or (plan[b] == "partial" and f in keptset)
+        ]
+        parts = []
+        if to_rewrite:
+            base_df = _read_visible_base(
+                spark, snap, to_rewrite, cols_, types_,
+                snap.get("column_epochs"), snap.get("file_versions"),
+            )
+            tomb = (
+                F.coalesce(
+                    F.col(TOMBSTONE_COL).cast("boolean"), F.lit(False)
                 )
-                parts.append(base_df.filter(tomb | out_of_slice))
-            parts.append(batch)
-            if not nothing_staged:
-                out = parts[0]
-                for p_ in parts[1:]:
-                    out = out.unionByName(p_)
-                _write_clustered(
-                    out.withColumn(
-                        "bucket", _bucket_of(key_col, n_buckets)
-                    ),
-                    staging, key_col, 1, n_buckets,
-                    snap.get("cluster_col"), snap.get("cluster_bins", 4),
-                )
-        except Exception as ex:
-            shutil.rmtree(staging, ignore_errors=True)
-            if _is_missing_file_error(ex):
-                continue  # vacuum expired the pin mid-read: re-pin
-            raise
-        new_files = (
-            _list_bucket_files(staging) if not nothing_staged else {}
-        )
+                if TOMBSTONE_COL in types_
+                else F.lit(False)
+            )
+            parts.append(base_df.filter(tomb | out_of_slice))
+        parts.append(batch)
+        # an empty slice over an empty batch stages nothing: the
+        # {**snap} copy's sidecar maps stay exact, like OPTIMIZE's
+        # metadata-only commits
+        staging = None
+        if to_rewrite or new_buckets:
+            staging = new_dir("replace")
+            out = parts[0]
+            for p_ in parts[1:]:
+                out = out.unionByName(p_)
+            _write_clustered(
+                out.withColumn(
+                    "bucket", _bucket_of(key_col, n_buckets)
+                ),
+                staging, key_col, 1, n_buckets,
+                snap.get("cluster_col"), snap.get("cluster_bins", 4),
+            )
+        new_files = _list_bucket_files(staging) if staging else {}
         buckets: dict[str, list] = {}
         for b, fs in snap["buckets"].items():
             if plan[b] == "carry":
@@ -3946,39 +3907,21 @@ def replace_where_range(
         manifest = _strip_commit_records(
             {
                 **snap,
-                "version": next_version,
+                "version": snap["version"] + 1,
                 "commit_kind": "replace",
                 "writer_id": writer_id,
-                "buckets": {k: buckets[k] for k in sorted(buckets, key=int)},
+                "buckets": _bucket_map(buckets),
             }
         )
-        dels = {
-            b: fs for b, fs in dels_all.items() if plan.get(b) != "full" and fs
-        }
-        manifest.pop("delete_files", None)
-        if dels:
-            manifest["delete_files"] = {
-                k: dels[k] for k in sorted(dels, key=int)
-            }
-        dvs = {
-            b: fs for b, fs in dvs_all.items() if plan.get(b) != "full" and fs
-        }
-        manifest.pop("dv_files", None)
-        if dvs:
-            manifest["dv_files"] = {k: dvs[k] for k in sorted(dvs, key=int)}
-        if not nothing_staged:
+        full = {int(b) for b, how in plan.items() if how == "full"}
+        _carry_pending_deletes(manifest, snap, full)
+        if staging:
             _attach_sidecars(spark, snap, manifest, buckets, staging)
-        # an empty slice over an empty batch stages nothing: the
-        # {**snap} copy's sidecar maps stay exact, like OPTIMIZE's
-        # metadata-only commits
-        if before_commit is not None:
-            before_commit(attempt)
-        if _publish_manifest(base_dir, manifest):
-            return next_version, attempt + 1
-        shutil.rmtree(staging, ignore_errors=True)
-    raise MergeConflictError(
-        f"replaceWhere by {writer_id} lost the commit race "
-        f"{max_retries + 1} times"
+        return manifest, manifest["version"]
+
+    return _commit(
+        base_dir, writer_id, f"replaceWhere by {writer_id}", stage,
+        max_retries=max_retries, before_commit=before_commit,
     )
 
 
@@ -4052,17 +3995,10 @@ def delete_keys_dv(
     pruned position scan at delete time is too much.
 
     Returns ``(committed_version, attempts)``."""
-    import shutil
-
-    for attempt in range(max_retries + 1):
-        snap = load_manifest(base_dir)
+    def stage(snap, new_dir):
         key_col, n_buckets = snap["key_col"], snap["n_buckets"]
         key_type = snap["column_types"][key_col]
-        cols_, types_ = snap["columns"], snap["column_types"]
-        next_version = snap["version"] + 1
-        staging = _staging_path(
-            base_dir, "dv", next_version, writer_id, attempt
-        )
+        types_ = snap["column_types"]
         keys = (
             keys_df.select(
                 F.col(keys_df.columns[0]).cast(key_type).alias(key_col)
@@ -4070,90 +4006,68 @@ def delete_keys_dv(
             .distinct()
             .withColumn("bucket", _bucket_of(key_col, n_buckets))
         )
-        try:
-            touched = sorted(
-                r.bucket
-                for r in keys.select("bucket").distinct().collect()
+        touched = sorted(
+            r.bucket for r in keys.select("bucket").distinct().collect()
+        )
+        files = [f for b in touched for f in snap["buckets"].get(str(b), [])]
+        dvs = {b: list(fs) for b, fs in (snap.get("dv_files") or {}).items()}
+        if files:
+            # position-finding read: key + tombstone visibility + native
+            # row indexes ONLY (column-pruned); every pending delete
+            # representation applies first, so an already-hidden key
+            # yields no position
+            sub = [key_col] + (
+                [TOMBSTONE_COL] if TOMBSTONE_COL in types_ else []
             )
-            files = [
-                f for b in touched for f in snap["buckets"].get(str(b), [])
-            ]
-            if files:
-                # position-finding read: key + tombstone visibility +
-                # native row indexes ONLY (column-pruned); every
-                # pending delete representation applies first, so an
-                # already-hidden key yields no position
-                sub = [key_col] + (
-                    [TOMBSTONE_COL] if TOMBSTONE_COL in types_ else []
-                )
-                df = _read_files_aligned(
-                    spark, files, sub,
-                    {c: types_[c] for c in sub},
-                    snap.get("column_epochs"),
-                    snap.get("file_versions"),
-                    carry_positions=True,
-                )
-                if snap.get("dv_files"):
-                    df = _apply_dv_deletes(
-                        spark, df, snap, keep_positions=True
-                    )
-                df = _apply_mor_deletes(spark, df, snap)
-                df = _visible_rows(df)
-                hits = df.join(
-                    F.broadcast(keys.select(key_col)), key_col, "inner"
-                ).select(
-                    _bucket_of(key_col, n_buckets).alias("bucket"),
-                    F.col(DV_FILE_COL).alias("file"),
-                    (F.col(DV_POS_COL) / 64).cast("int").alias("w"),
-                    F.expr(
-                        "shiftleft(CAST(1 AS BIGINT), "
-                        f"CAST({DV_POS_COL} % 64 AS INT))"
-                    ).alias("bit"),
-                )
-                words = hits.groupBy("bucket", "file", "w").agg(
-                    F.bit_or("bit").alias("word")
-                )
-                (
-                    words.repartition(F.col("bucket"))
-                    .write.mode("overwrite")
-                    .partitionBy("bucket")
-                    .parquet(staging)
-                )
-                new_files = _list_bucket_files(staging)
-            else:
-                new_files = {}
-        except Exception as ex:
-            shutil.rmtree(staging, ignore_errors=True)
-            if _is_missing_file_error(ex):
-                continue  # vacuum expired the pin mid-read: re-pin
-            raise
-        dvs = {
-            b: list(fs)
-            for b, fs in (snap.get("dv_files") or {}).items()
-        }
-        for b, fs in new_files.items():
-            dvs[str(b)] = dvs.get(str(b), []) + fs
+            df = _read_files_aligned(
+                spark, files, sub,
+                {c: types_[c] for c in sub},
+                snap.get("column_epochs"),
+                snap.get("file_versions"),
+                carry_positions=True,
+            )
+            if snap.get("dv_files"):
+                df = _apply_dv_deletes(spark, df, snap, keep_positions=True)
+            df = _apply_mor_deletes(spark, df, snap)
+            df = _visible_rows(df)
+            hits = df.join(
+                F.broadcast(keys.select(key_col)), key_col, "inner"
+            ).select(
+                _bucket_of(key_col, n_buckets).alias("bucket"),
+                F.col(DV_FILE_COL).alias("file"),
+                (F.col(DV_POS_COL) / 64).cast("int").alias("w"),
+                F.expr(
+                    "shiftleft(CAST(1 AS BIGINT), "
+                    f"CAST({DV_POS_COL} % 64 AS INT))"
+                ).alias("bit"),
+            )
+            staging = new_dir("dv")
+            (
+                hits.groupBy("bucket", "file", "w")
+                .agg(F.bit_or("bit").alias("word"))
+                .repartition(F.col("bucket"))
+                .write.mode("overwrite")
+                .partitionBy("bucket")
+                .parquet(staging)
+            )
+            for b, fs in _list_bucket_files(staging).items():
+                dvs[str(b)] = dvs.get(str(b), []) + fs
         manifest = _strip_commit_records(
             {
                 **snap,
-                "version": next_version,
+                "version": snap["version"] + 1,
                 "commit_kind": "delete",
                 "writer_id": writer_id,
             }
         )
         manifest.pop("dv_files", None)
         if dvs:
-            manifest["dv_files"] = {
-                k: dvs[k] for k in sorted(dvs, key=int)
-            }
-        if before_commit is not None:
-            before_commit(attempt)
-        if _publish_manifest(base_dir, manifest):
-            return next_version, attempt + 1
-        shutil.rmtree(staging, ignore_errors=True)
-    raise MergeConflictError(
-        f"DV delete by {writer_id} lost the commit race "
-        f"{max_retries + 1} times"
+            manifest["dv_files"] = _bucket_map(dvs)
+        return manifest, manifest["version"]
+
+    return _commit(
+        base_dir, writer_id, f"DV delete by {writer_id}", stage,
+        max_retries=max_retries, before_commit=before_commit,
     )
 
 
@@ -4817,70 +4731,57 @@ def rebucket_table(
     guarantee across the rewrite.
 
     Returns ``(committed_version, attempts)``."""
-    import shutil
-
     if new_n_buckets < 1:
         raise ValueError(f"new_n_buckets must be >= 1, got {new_n_buckets}")
-    for attempt in range(max_retries + 1):
-        snap = load_manifest(base_dir)
+
+    def stage(snap, new_dir):
         key_col = snap["key_col"]
         if snap["n_buckets"] == new_n_buckets:
-            return snap["version"], 0
+            return None, snap["version"]
         cols, types = snap.get("columns"), snap.get("column_types")
-        next_version = snap["version"] + 1
-        staging = _staging_path(
-            base_dir, "rebucket", next_version, writer_id, attempt
+        files = [f for fs in snap["buckets"].values() for f in fs]
+        if cols is None or types is None:
+            # legacy pre-evolution manifest: derive the logical schema
+            # from the files (uniform by construction) and RECORD it in
+            # the new manifest
+            if not files:
+                raise ValueError(
+                    f"manifest v{snap['version']} at {base_dir} has "
+                    "no schema and no files; cannot rebucket"
+                )
+            derived = spark.read.parquet(*files)
+            cols = list(derived.columns)
+            types = _column_types(derived)
+        # include_tombstones semantics: NO visibility filter — a live
+        # tombstone must keep suppressing lower-version stragglers after
+        # the rewrite. Pending MOR deletes DO apply (full rewrite = every
+        # sidecar applied + cleared)
+        df = _read_visible_base(
+            spark, snap, files, cols, types,
+            snap.get("column_epochs"), snap.get("file_versions"),
+        ).withColumn("bucket", _bucket_of(key_col, new_n_buckets))
+        staging = new_dir("rebucket")
+        _write_clustered(
+            df, staging, key_col, write_salt, new_n_buckets,
+            snap.get("cluster_col"), snap.get("cluster_bins", 4),
         )
-        try:
-            files = [f for fs in snap["buckets"].values() for f in fs]
-            if cols is None or types is None:
-                # legacy pre-evolution manifest: derive the logical
-                # schema from the files (uniform by construction) and
-                # RECORD it in the new manifest
-                if not files:
-                    raise ValueError(
-                        f"manifest v{snap['version']} at {base_dir} has "
-                        "no schema and no files; cannot rebucket"
-                    )
-                derived = spark.read.parquet(*files)
-                cols = list(derived.columns)
-                types = _column_types(derived)
-            # include_tombstones semantics: NO visibility filter — a
-            # live tombstone must keep suppressing lower-version
-            # stragglers after the rewrite. Pending MOR deletes DO
-            # apply (full rewrite = every sidecar applied + cleared)
-            df = _read_visible_base(
-                spark, snap, files, cols, types,
-                snap.get("column_epochs"), snap.get("file_versions"),
-            ).withColumn("bucket", _bucket_of(key_col, new_n_buckets))
-            _write_clustered(
-                df, staging, key_col, write_salt, new_n_buckets,
-                snap.get("cluster_col"), snap.get("cluster_bins", 4),
-            )
-            # footer-read boolean max when the marker is a plain
-            # boolean (zero Spark jobs — the same _staged_tombstone_
-            # buckets init uses), distributed scan otherwise
-            tomb_buckets = (
-                _staged_tombstone_buckets(spark, staging, types)
-                if TOMBSTONE_COL in types
-                else []
-            )
-        except Exception as ex:
-            shutil.rmtree(staging, ignore_errors=True)
-            if _is_missing_file_error(ex):
-                continue  # vacuum expired the pin mid-read: re-pin
-            raise
-        new_files = _list_bucket_files(staging)
         manifest = {
-            "version": next_version,
+            "version": snap["version"] + 1,
             "commit_kind": "rebucket",
             "writer_id": writer_id,
             "n_buckets": new_n_buckets,
             "key_col": key_col,
             "columns": list(cols),
             "column_types": dict(types),
-            "buckets": {str(b): fs for b, fs in sorted(new_files.items())},
-            "tombstone_buckets": tomb_buckets,
+            "buckets": _bucket_map(_list_bucket_files(staging)),
+            # footer-read boolean max when the marker is a plain boolean
+            # (zero Spark jobs — the same _staged_tombstone_buckets init
+            # uses), distributed scan otherwise
+            "tombstone_buckets": (
+                _staged_tombstone_buckets(spark, staging, types)
+                if TOMBSTONE_COL in types
+                else []
+            ),
             "column_epochs": snap.get("column_epochs")
             or {c: 1 for c in cols},
         }
@@ -4888,13 +4789,11 @@ def rebucket_table(
         _attach_sidecars(
             spark, snap, manifest, manifest["buckets"], staging, carry=False
         )
-        if before_commit is not None:
-            before_commit(attempt)
-        if _publish_manifest(base_dir, manifest):
-            return next_version, attempt + 1
-        shutil.rmtree(staging, ignore_errors=True)
-    raise MergeConflictError(
-        f"rebucket by {writer_id} lost the commit race {max_retries + 1} times"
+        return manifest, manifest["version"]
+
+    return _commit(
+        base_dir, writer_id, f"rebucket by {writer_id}", stage,
+        max_retries=max_retries, before_commit=before_commit,
     )
 
 

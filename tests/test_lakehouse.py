@@ -17,6 +17,8 @@ from assignment4_spark.operators.lakehouse import (
     read_snapshot,
 )
 
+from .commit_faces import HOOKED_FACES, hooked_face, spoil, unreferenced_staging
+
 
 def _mk_table(spark, tmp_path, n=200, n_buckets=8):
     base = str(tmp_path / "tbl")
@@ -138,29 +140,33 @@ def test_two_writer_conflict_retries(spark, tmp_path):
     assert read_snapshot(spark, base, version=1).count() == 200
 
 
-def test_conflict_exhaustion_raises(spark, tmp_path):
+@pytest.mark.parametrize("face", sorted(HOOKED_FACES))
+def test_conflict_exhaustion_raises(spark, tmp_path, face):
     """A writer that loses the CAS on every attempt must fail loudly
-    (MergeConflictError), never publish a torn manifest."""
-    base = _mk_table(spark, tmp_path)
-    counter = {"n": 0}
+    (MergeConflictError) after exactly max_retries + 1 attempts, never
+    publish (every version after it started is a spoiler's and the
+    visible rows are unchanged), and leave no staging behind — for
+    every face that takes a before_commit hook."""
+    base, run = hooked_face(spark, tmp_path, face)
+    head = latest_version(base)
+    before = sorted(map(tuple, read_snapshot(spark, base).collect()))
+    attempts = []
 
     def always_lose(attempt):
-        counter["n"] += 1
-        merge_upsert_manifest(
-            base, _upd(spark, [attempt + 100], 2, "spoiler"), "ver", "payload",
-            writer_id=f"S{attempt}",
-        )
+        attempts.append(attempt)
+        spoil(base)
 
     with pytest.raises(MergeConflictError):
-        merge_upsert_manifest(
-            base, _upd(spark, [1], 2, "loser"), "ver", "payload",
-            writer_id="L", max_retries=2, before_commit=always_lose,
-        )
-    assert counter["n"] == 3  # initial try + 2 retries, each spoiled
-    # every committed version is a spoiler's — the loser left nothing
-    rows = {r.k: r.payload for r in read_snapshot(spark, base).collect()}
-    assert rows[1] == "p1", "loser's update must not be visible"
-    assert {"spoiler100", "spoiler101", "spoiler102"} <= set(rows.values())
+        run(always_lose, 2)
+    assert attempts == [0, 1, 2]  # initial try + 2 retries, each spoiled
+    assert latest_version(base) == head + 3
+    assert all(
+        load_manifest(base, v)["writer_id"] == "spoiler"
+        for v in range(head + 1, head + 4)
+    ), "the loser must publish nothing"
+    after = sorted(map(tuple, read_snapshot(spark, base).collect()))
+    assert after == before
+    assert unreferenced_staging(base) == []
 
 
 def test_init_twice_rejected(spark, tmp_path):
@@ -284,37 +290,26 @@ def test_vacuum_retention_window(spark, tmp_path):
     assert (v, tries) == (4, 1)
 
 
-def test_lost_cas_leaves_no_orphan_staging(spark, tmp_path):
-    """A lost CAS (and an exhausted merge) must clean up its staging
-    directory: those files appear in no manifest, so vacuum would never
-    reclaim them and every conflict would otherwise leak a
-    touched-bucket-sized copy of the data forever."""
-    import os
+@pytest.mark.parametrize("face", sorted(HOOKED_FACES))
+def test_lost_cas_leaves_no_orphan_staging(spark, tmp_path, face):
+    """A lost CAS must clean up the attempt's staging directories:
+    those files appear in no manifest, so vacuum (without an orphan
+    grace window) would never reclaim them and every conflict would
+    otherwise leak a staged copy of the data forever."""
+    base, run = hooked_face(spark, tmp_path, face)
+    head = latest_version(base)
+    attempts = []
 
-    base = _mk_table(spark, tmp_path)
-
-    def spoil(attempt):
+    def spoil_first(attempt):
+        attempts.append(attempt)
         if attempt == 0:
-            merge_upsert_manifest(
-                base, _upd(spark, [50], 2, "s"), "ver", "payload", writer_id="S"
-            )
+            spoil(base)
 
-    merge_upsert_manifest(
-        base, _upd(spark, [10], 2, "a"), "ver", "payload",
-        writer_id="A", before_commit=spoil,
-    )
-    referenced = {
-        os.path.dirname(os.path.dirname(f))
-        for v in (1, 2, 3)
-        for fs in load_manifest(base, v)["buckets"].values()
-        for f in fs
-    }
-    on_disk = {
-        os.path.join(base, d)
-        for d in os.listdir(base)
-        if d.startswith("commit_") and os.path.isdir(os.path.join(base, d))
-    }
-    assert on_disk == referenced, f"orphans: {sorted(on_disk - referenced)}"
+    run(spoil_first, 5)
+    assert attempts == [0, 1], "must lose attempt 0 and win attempt 1"
+    assert latest_version(base) == head + 2
+    assert load_manifest(base)["writer_id"] != "spoiler"
+    assert unreferenced_staging(base) == [], "lost attempt's staging leaked"
 
 
 def test_merge_rejects_type_drift(spark, tmp_path):
